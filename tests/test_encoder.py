@@ -221,3 +221,31 @@ def test_hash_embedding_expr_null_text_equals_kernel_empty(spark):
     kernel = hash_embed_texts([""])[0]
     assert rows[1] is not None
     assert list(rows[1]) == list(rows[2]) == [float(x) for x in kernel]
+
+
+def test_hash_embedding_udf_cached_per_spark_context(spark, monkeypatch):
+    """The UDF wrapper is reused within one SparkContext, and a new
+    context (a restart) gets a new wrapper while the old ones are
+    dropped: a cached wrapper holds its creating context's JVM UDF."""
+    from pyspark import SparkContext
+
+    from topic_modeling_ajin_spark.functions import encoder as E
+
+    sc = spark.sparkContext
+    live = E._hash_emb_udf(ENCODER_DIM)
+    assert E._hash_emb_udf(ENCODER_DIM) is live
+    assert E._HASH_EMB_UDFS[(sc, ENCODER_DIM)] is live
+
+    class Restarted:  # a new context object; JVM calls reach the live one
+        def __getattr__(self, name):
+            return getattr(sc, name)
+
+    restarted = Restarted()
+    monkeypatch.setattr(SparkContext, "_active_spark_context", restarted)
+    fresh = E._hash_emb_udf(ENCODER_DIM)
+    assert fresh is not live
+    assert set(E._HASH_EMB_UDFS) == {(restarted, ENCODER_DIM)}
+
+    monkeypatch.undo()
+    assert E._hash_emb_udf(ENCODER_DIM) is not fresh
+    assert set(E._HASH_EMB_UDFS) == {(sc, ENCODER_DIM)}

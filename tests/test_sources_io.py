@@ -143,6 +143,29 @@ def test_full_analysis_pipeline(spark, sf_dir, tmp_path):
         assert df.count() > 0, name
 
 
+def test_read_nanos_parquet_restores_conf_across_threads(spark, sf_dir):
+    """Overlapping callers must not leave ``nanosAsLong`` set: each saves
+    and restores the session conf around its read."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from topic_modeling_ajin_spark.sources.tables import _read_nanos_parquet
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    path = f"{sf_dir}/events.parquet"
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=2 * (os.cpu_count() or 4)) as pool:
+            futures = [pool.submit(_read_nanos_parquet, spark, path) for _ in range(32)]
+            dfs = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert spark.conf.get(key, None) == before
+    assert {tuple(df.columns) for df in dfs} == {tuple(dfs[0].columns)}
+
+
 REFERENCE_RAW = (
     "/root/reference/RAW_DATA/"
     "2025_6_28_22_56_49_4600_channel_download_ai광고.xlsx"

@@ -73,6 +73,27 @@ def test_lda_topic_terms_invariants(spark, sf_dir, registry):
         assert len(terms) == len(set(terms)), topic  # no repeated term in a topic
 
 
+def test_lda_vocabulary_is_count_vectorizers_in_a_fixed_order(spark, sf_dir):
+    """The LDA vocabulary holds CountVectorizer(minDF=2)'s terms, most
+    frequent first and equal counts by term, so term indices (and the
+    seeded fit) do not depend on task timing."""
+    from collections import Counter
+
+    from pyspark.ml.feature import CountVectorizer
+
+    from topic_modeling_ajin_spark.operators.topics import _vector_corpus
+
+    model, corpus = _vector_corpus(spark, sf_dir)
+    toks = corpus.select("tokens")
+    ref = CountVectorizer(
+        inputCol="tokens", outputCol="f", minDF=2.0, vocabSize=50_000
+    ).fit(toks)
+    vocab = list(model.vocabulary)
+    assert set(vocab) == set(ref.vocabulary)
+    counts = Counter(t for r in toks.collect() for t in r.tokens)
+    assert vocab == sorted(vocab, key=lambda t: (-counts[t], t))
+
+
 def test_lda_doc_topics_simplex(spark, sf_dir, registry):
     rows = registry["lda_doc_topics"].fn(spark, sf_dir).collect()
     assert rows

@@ -82,11 +82,19 @@ def _build_pool_cap(n_builders: int) -> int:
     1.5-3x worse than the builder's solo runs. Cap at cpus//4 (8 on the
     32-core box, 2 on the 8-core run) so overlap still back-fills the
     executor tail without fighting the rest of the machine;
-    ``SPARK_GRAFT_BUILD_POOL`` overrides for measurement experiments."""
+    ``SPARK_GRAFT_BUILD_POOL`` overrides for measurement experiments.
+    A value of either variable that is not an integer is ignored (the
+    default applies) rather than failing every concurrent build."""
     env = os.environ.get("SPARK_GRAFT_BUILD_POOL")
     if env:
-        return max(1, min(n_builders, int(env)))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+        try:
+            return max(1, min(n_builders, int(env)))
+        except ValueError:
+            pass
+    try:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    except ValueError:
+        cpus = os.cpu_count() or 8
     return max(2, min(n_builders, cpus // 4))
 
 

@@ -310,11 +310,21 @@ def hash_embedding_udf(text_col, dim: int = ENCODER_DIM):
     pure-expression face: a micro-batch filter must stay a stateless
     column predicate.
 
-    The wrapped pandas_udf object is built once per ``dim`` and cached
-    (r13 ADVICE): constructing a fresh wrapper per call registered a
-    duplicate Python function for every invocation in a plan and
-    defeated common-subexpression reuse between them."""
-    udf = _HASH_EMB_UDFS.get(dim)
+    The wrapped pandas_udf object is built once per (SparkContext, ``dim``)
+    and cached (r13 ADVICE): constructing a fresh wrapper per call
+    registered a duplicate Python function for every invocation in a plan
+    and defeated common-subexpression reuse between them. The wrapper
+    memoizes its JVM UDF on first use, bound to the context of that
+    moment, so the key includes the active context: after a restart the
+    old wrappers (dropped here) would hold a dead JVM handle."""
+    return _hash_emb_udf(dim)(text_col)
+
+
+def _hash_emb_udf(dim: int):
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    udf = _HASH_EMB_UDFS.get((sc, dim))
     if udf is None:
         import pandas as pd  # noqa: F811 (kernel-local, executor side)
         from pyspark.sql.functions import pandas_udf
@@ -323,8 +333,10 @@ def hash_embedding_udf(text_col, dim: int = ENCODER_DIM):
         def _emb(texts: pd.Series) -> pd.Series:
             return pd.Series(hash_embed_texts(texts, dim))
 
-        _HASH_EMB_UDFS[dim] = udf = _emb
-    return udf(text_col)
+        for key in [k for k in _HASH_EMB_UDFS if k[0] is not sc]:
+            del _HASH_EMB_UDFS[key]
+        _HASH_EMB_UDFS[(sc, dim)] = udf = _emb
+    return udf
 
 
-_HASH_EMB_UDFS: dict[int, Any] = {}
+_HASH_EMB_UDFS: dict[tuple[Any, int], Any] = {}

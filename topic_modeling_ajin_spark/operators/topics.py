@@ -249,19 +249,37 @@ LDA_K = 5  # CLI-overridable topic count (python -m topic_modeling_ajin_spark -t
 def _vector_corpus(spark: SparkSession, sf_dir: str):
     """CountVectorizer pipeline over tokenized documents (SURVEY M1),
     memoized per (session, dataset); the corpus DataFrame is persisted
-    because every consumer (fit, transform, sweep) scans it repeatedly."""
+    because every consumer (fit, transform, sweep) scans it repeatedly.
+
+    The vocabulary is ``CountVectorizer(minDF=2, vocabSize=50_000)``'s —
+    terms in >= 2 documents, the most frequent first — with equal counts
+    ordered by term. ``CountVectorizer.fit`` orders by count alone, so
+    ties came out in task-completion order, and each term's index (and
+    with it the seeded LDA fit) changed from run to run."""
 
     def build():
-        from pyspark.ml.feature import CountVectorizer
+        from pyspark.ml.feature import CountVectorizerModel
 
         d = parallelized(load_table(spark, sf_dir, "documents"))
         toks = d.select("doc_id", TX.tokens("text").alias("tokens")).filter(
             F.size("tokens") >= 3
         )
-        cv = CountVectorizer(
-            inputCol="tokens", outputCol="features", minDF=2.0, vocabSize=50_000
+        # a term is in >= 2 documents iff its first and last row differ
+        # (cheaper than a distinct count)
+        vocab = [
+            r.term
+            for r in toks.withColumn("row", F.monotonically_increasing_id())
+            .select("row", F.explode("tokens").alias("term"))
+            .groupBy("term")
+            .agg(F.count("*").alias("tf"), F.min("row").alias("lo"), F.max("row").alias("hi"))
+            .filter(F.col("lo") < F.col("hi"))
+            .orderBy(F.desc("tf"), "term")
+            .limit(50_000)
+            .collect()
+        ]
+        model = CountVectorizerModel.from_vocabulary(
+            vocab, inputCol="tokens", outputCol="features"
         )
-        model = cv.fit(toks)
         corpus = model.transform(toks).persist()
         return (model, corpus)
 
@@ -431,6 +449,12 @@ MAX_TOPICS_AFTER_REDUCE = 6
 _MAX_UNROLL_LABELS = 32
 _REDUCE_STEPS = _MAX_UNROLL_LABELS - MAX_TOPICS_AFTER_REDUCE
 
+# explicit schemas (the types inference gives non-empty rows): a corpus
+# with <= MAX_TOPICS_AFTER_REDUCE labels merges nothing, and a single
+# label has no pairs at all — empty lists that cannot be inferred from
+_REDUCTION_SCHEMA = "label bigint, merged_topic bigint"
+_MERGE_STEPS_SCHEMA = "step bigint, into_root bigint, from_root bigint, cosine double"
+
 
 def _sql_merge_steps(steps: int) -> str:
     """Unrolled single-linkage merges over the static ``sims`` pair table:
@@ -512,7 +536,7 @@ def q_topic_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction oracle-checkable: DuckDB replays the merges as unrolled
     pick-max-eligible-pair steps over the same static cosine table."""
     mapping, _ = _reduction_merges(spark, sf_dir)
-    return spark.createDataFrame(mapping, ["label", "merged_topic"])
+    return spark.createDataFrame(mapping, _REDUCTION_SCHEMA)
 
 
 def _reduction_merges(spark: SparkSession, sf_dir: str):
@@ -520,7 +544,15 @@ def _reduction_merges(spark: SparkSession, sf_dir: str):
     cosine matrix. Returns (mapping, merges): the final label→root pairs
     and the ordered merge log [(step, into_root, from_root, cos)] — the
     data behind both ``topic_reduction`` and ``topic_merge_steps`` (and
-    the dendrogram sink)."""
+    the dendrogram sink). Memoized per (session, dataset): the figure
+    pass reads both tables, and the cosine self-join + collect behind
+    them would otherwise run twice."""
+    return memo(
+        spark, ("reduction_merges", sf_dir), lambda: _build_reduction_merges(spark, sf_dir)
+    )
+
+
+def _build_reduction_merges(spark: SparkSession, sf_dir: str):
     w = class_term_weights(spark, sf_dir)
     norms = w.groupBy("label").agg(
         F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm")
@@ -603,7 +635,7 @@ def q_topic_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         (s, a, b, float(Decimal(c).quantize(q6, rounding=ROUND_HALF_UP)))
         for s, a, b, c in merges
     ]
-    return spark.createDataFrame(rows, ["step", "into_root", "from_root", "cosine"])
+    return spark.createDataFrame(rows, _MERGE_STEPS_SCHEMA)
 
 
 # ------------------------------------------------- sweep & soft clustering

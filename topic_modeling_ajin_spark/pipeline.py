@@ -8,17 +8,42 @@ reference's top-level entry points (SURVEY §3):
   (BERTopic-shape) path and the MLlib-LDA path — over one shared corpus,
   plus the metric suite and composed reports.
 
-Every stage is a registry operator; this module only sequences them and
-writes the outputs (parquet tables + a text report). Nothing here collects
-more than K-row report tables to the driver.
+Every stage is a registry operator; this module only schedules them and
+writes the outputs (parquet tables + a text report + figures). Nothing
+here collects more than K-row report tables to the driver.
+
+Concurrent schedule: each output (one registry table write, the text
+report, the figure pass) is one builder, and all of a run's builders go
+to ``cache.build_concurrently`` together, so the many 1–3-task jobs of
+independent outputs overlap on the shared session instead of leaving
+most cores idle one output at a time. Builders are submitted longest
+serial chain first (``SUBMIT_FIRST``: the driver-coordinated online-LDA
+fit, then the three window-coherence kernels), so the long chains start
+at once and the short outputs back-fill around them. This is safe
+because:
+
+- outputs that share an intermediate (c-TF-IDF weights, top-k keywords,
+  the vector corpus and LDA fit, window co-occurrence counts, the topic
+  word list, the reduction merge log) reach it through ``cache.memo``,
+  whose per-key locks let exactly one thread build it while the others
+  wait and read the memo;
+- every operator is deterministic in its inputs, so a concurrent run
+  writes the same rows as the serial order (pinned by
+  ``tests/test_pipeline.py``); only the wall clock overlaps;
+- each builder writes its own path, and the returned ``written`` map is
+  merged in the serial order ``WORD_FREQUENCY_OUTPUTS``, the text report,
+  ``FULL_ANALYSIS_OUTPUTS``, then the figures.
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
+from .cache import build_concurrently
 from .registry import load_all
 from .report import render_text_report
 
@@ -49,16 +74,55 @@ FULL_ANALYSIS_OUTPUTS = (
     "cv_coherence",
 )
 
+# the longest serial chains, submitted before every other output: the
+# online-LDA fit (one driver-coordinated job chain per iteration), then
+# the window-coherence kernels (one co-occurrence pass per window size)
+SUBMIT_FIRST = ("lda_topic_terms", "umass_coherence", "npmi_coherence", "cv_coherence")
 
-def _write_outputs(
-    spark: SparkSession, sf_dir: str, out_dir: str, names: tuple[str, ...]
+Step = Callable[[], dict[str, str]]
+
+
+def _write_table(
+    name: str, query, spark: SparkSession, sf_dir: str, out_dir: str
 ) -> dict[str, str]:
+    path = os.path.join(out_dir, name)
+    query(spark, sf_dir).write.mode("overwrite").parquet(path)
+    return {name: path}
+
+
+def _write_report(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
+    path = os.path.join(out_dir, "analysis_report.txt")
+    render_text_report(spark, sf_dir, path)
+    return {"analysis_report": path}
+
+
+def _table_steps(
+    spark: SparkSession, sf_dir: str, out_dir: str, names: tuple[str, ...]
+) -> dict[str, Step]:
     registry = load_all()
+    return {
+        n: partial(_write_table, n, registry[n].fn, spark, sf_dir, out_dir) for n in names
+    }
+
+
+def _word_frequency_steps(
+    spark: SparkSession, sf_dir: str, out_dir: str
+) -> dict[str, Step]:
+    steps = _table_steps(spark, sf_dir, out_dir, WORD_FREQUENCY_OUTPUTS)
+    steps["analysis_report"] = partial(_write_report, spark, sf_dir, out_dir)
+    return steps
+
+
+def _run_steps(out_dir: str, steps: dict[str, Step]) -> dict[str, str]:
+    """Run every step through ``build_concurrently``, ``SUBMIT_FIRST``
+    first, and merge their outputs in the steps' own order."""
+    os.makedirs(out_dir, exist_ok=True)  # the text report is not a Spark write
+    order = [s for s in SUBMIT_FIRST if s in steps]
+    order += [s for s in steps if s not in order]
+    done = dict(zip(order, build_concurrently([steps[s] for s in order])))
     written: dict[str, str] = {}
-    for name in names:
-        path = os.path.join(out_dir, name)
-        registry[name].fn(spark, sf_dir).write.mode("overwrite").parquet(path)
-        written[name] = path
+    for s in steps:
+        written.update(done[s])
     return written
 
 
@@ -67,11 +131,7 @@ def run_word_frequency(
 ) -> dict[str, str]:
     """§3.1: scan → clean → tokenize → count → stats → sinks (word
     frequency workbook + text report)."""
-    written = _write_outputs(spark, sf_dir, out_dir, WORD_FREQUENCY_OUTPUTS)
-    report_path = os.path.join(out_dir, "analysis_report.txt")
-    render_text_report(spark, sf_dir, report_path)
-    written["analysis_report"] = report_path
-    return written
+    return _run_steps(out_dir, _word_frequency_steps(spark, sf_dir, out_dir))
 
 
 def run_full_analysis(
@@ -79,11 +139,13 @@ def run_full_analysis(
 ) -> dict[str, str]:
     """§3.2: the combined topic-modeling run — both branches + metrics +
     reports + figures, every tabular output a parquet table keyed by its
-    operator name."""
-    written = run_word_frequency(spark, sf_dir, out_dir)
-    written.update(_write_outputs(spark, sf_dir, out_dir, FULL_ANALYSIS_OUTPUTS))
-    written.update(run_visual_report(spark, sf_dir, os.path.join(out_dir, "figures")))
-    return written
+    operator name, all outputs built concurrently (module docstring)."""
+    steps = _word_frequency_steps(spark, sf_dir, out_dir)
+    steps.update(_table_steps(spark, sf_dir, out_dir, FULL_ANALYSIS_OUTPUTS))
+    steps["figures"] = partial(
+        run_visual_report, spark, sf_dir, os.path.join(out_dir, "figures")
+    )
+    return _run_steps(out_dir, steps)
 
 
 def run_visual_report(

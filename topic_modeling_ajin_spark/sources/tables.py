@@ -12,6 +12,7 @@ nothing here materializes on the driver.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,17 +72,26 @@ def _read_nanos_parquet(spark: SparkSession, path: str) -> DataFrame:
     is consulted at schema-inference time (verified: a later action on the
     returned DataFrame succeeds with the conf restored), so save/restore
     around the ``read.parquet`` call keeps other reads in the session seeing
-    real timestamp types."""
+    real timestamp types.
+
+    The save/read/restore runs under a module lock: two overlapping callers
+    (``cache.build_concurrently`` builders) could otherwise each capture
+    the other's ``"true"`` as the value to restore and leave it set for the
+    rest of the session."""
     key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        return spark.read.parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    with _NANOS_CONF_LOCK:
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, "true")
+        try:
+            return spark.read.parquet(path)
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
+
+
+_NANOS_CONF_LOCK = threading.Lock()
 
 
 def parallelized(df: DataFrame) -> DataFrame:
